@@ -121,13 +121,17 @@ def apply_changes(
     change is a migration, not a merge side effect. Keys can never be
     evolved — they must exist in both sides by contract.
 
-    ``touched`` (statement path): a caller that already computed the
-    distinct change-key set (e.g. the MERGE statement's in-plan
-    duplicate-key guard, which rides its own groupBy of the keys)
-    passes it here so the merge reuses that aggregate instead of
-    paying its own ``distinct()`` — the guard then costs zero extra
-    stages. Must hold exactly the distinct keys of ``changes``
-    post-filtering; columns must be the key columns."""
+    ``touched``: the change-key set the target rows are anti-joined
+    against, for a caller that already has it so the merge does not
+    derive it again. The MERGE statement passes the keys of its in-plan
+    duplicate-key guard (zero extra stages); the CDC pipeline passes
+    the keys of its PRE-compaction change set, so the latest-per-key
+    compaction is planned once, not once more for its keys. Columns
+    must be the key columns, and the key set must equal that of
+    ``changes`` after the ``ignore_deletes`` filter — duplicates
+    allowed; caller guarantees no NULL-op rows (a NULL-op survivor is
+    neither upsert nor delete, so the default path leaves its target
+    row alone while a caller-built key set would drop it)."""
     # ignore_deletes BEFORE compaction: with deletes ignored they are
     # no-ops, so an upsert superseded by a later delete in the same
     # batch must still land (compacting first would keep only the

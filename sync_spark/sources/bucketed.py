@@ -22,10 +22,11 @@ per batch. This module restores the reference's cost model on files:
 - per-bucket swap is rename-aside (live → hidden ``.old_*`` parking
   dir, stage → live, drop parking dir). The guarantee is *crash
   safety*, not reader isolation: a crash at any point leaves the old
-  data recoverable (``recover_interrupted_swaps`` restores or clears
-  parked dirs before every read/merge), but a concurrent reader may
-  transiently miss a bucket between the two renames, and multi-bucket
-  swaps are not mutually atomic. Deployments needing snapshot
+  data recoverable (``restore_parked_swaps`` restores or clears
+  parked dirs before every read/merge; only writers also sweep stale
+  ``__stage_*`` dirs), but a concurrent reader may transiently miss a
+  bucket between the two renames, and multi-bucket swaps are not
+  mutually atomic. Deployments needing snapshot
   isolation should feed the same ``apply_changes`` plan to
   Delta/Iceberg ``MERGE INTO`` instead. Parking dirs are dot-prefixed
   so Spark's file listing never sees them — a leftover can't poison
@@ -76,7 +77,7 @@ def bucket_expr(keys: Sequence[str], n_buckets: int) -> F.Column:
 
 
 def is_bucketed(path: str) -> bool:
-    recover_interrupted_swaps(path)
+    restore_parked_swaps(path)
     if not os.path.isdir(path):
         return False
     return any(e.startswith(f"{BUCKET_COL}=") for e in os.listdir(path))
@@ -110,6 +111,23 @@ def _swap_dir(src: str, dst: str) -> None:
 
 
 def recover_interrupted_swaps(path: str) -> None:
+    """Writer-side crash recovery: sweep stale ``<name>__stage_*``
+    siblings (a writer killed mid-staged-write), then heal parked dirs
+    (``restore_parked_swaps``). Called only at writer entry points —
+    the sweep is safe under the pipeline's single-writer discipline,
+    and without it every crash would leak a bucket-sized staged copy
+    forever. A READER must never sweep: the stage it would delete may
+    be a live writer's in-flight output (a concurrent read_target once
+    cost a running batch a whole bucket)."""
+    parent, base = os.path.dirname(path) or ".", os.path.basename(path)
+    if os.path.isdir(parent):
+        for entry in os.listdir(parent):
+            if entry.startswith(f"{base}__stage_"):
+                shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+    restore_parked_swaps(path)
+
+
+def restore_parked_swaps(path: str) -> None:
     """Heal crash leftovers from ``_swap_dir`` before any read/merge.
 
     For each parked ``.old_X`` (or legacy ``X__old``) entry under
@@ -123,15 +141,8 @@ def recover_interrupted_swaps(path: str) -> None:
 
     Also heals a crash during a ROOT-level swap (snapshot path): when
     ``path`` itself is missing but its parked ``.old_<name>`` sibling
-    exists, the sibling is restored. Stale ``<name>__stage_*`` dirs
-    (a writer killed mid-staged-write) are deleted — safe under the
-    pipeline's single-writer discipline, and without it every crash
-    would leak a bucket-sized staged copy forever."""
-    parent, base = os.path.dirname(path) or ".", os.path.basename(path)
-    if os.path.isdir(parent):
-        for entry in os.listdir(parent):
-            if entry.startswith(f"{base}__stage_"):
-                shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+    exists, the sibling is restored. Stage dirs are left alone: this
+    is the reader-side half of ``recover_interrupted_swaps``."""
     parked_root = _old_name(path)
     if not os.path.isdir(path):
         if os.path.isdir(parked_root):
@@ -213,6 +224,7 @@ def write_bucketed(
     without its sidecars (the ANN index's params file is the canonical
     user; a post-swap sidecar write would leave a data-bearing but
     unreadable index if the process died in the window)."""
+    recover_interrupted_swaps(path)
     stage = f"{path}__stage_{uuid.uuid4().hex[:8]}"
     (
         df.withColumn(BUCKET_COL, bucket_expr(keys, n_buckets))
@@ -248,7 +260,7 @@ def read_target(spark: SparkSession, path: str) -> DataFrame:
     parallel job over file metadata, not data — at scale, a full
     ``bucketize_in_place`` re-normalizes the layout when the footer
     pass starts to matter."""
-    recover_interrupted_swaps(path)
+    restore_parked_swaps(path)
     df = (
         spark.read.option("basePath", path)
         .option("mergeSchema", "true")
@@ -323,7 +335,7 @@ def read_buckets(
     partition pruning — and makes evolved layouts read uniformly:
     files missing a column yield NULLs, by name. Without it the
     first-footer schema wins (pre-evolution behavior)."""
-    recover_interrupted_swaps(path)
+    restore_parked_swaps(path)
     df = _base_frame(spark, path, schema)
     return df.filter(F.col(BUCKET_COL).isin(list(buckets))).drop(BUCKET_COL)
 

@@ -56,7 +56,7 @@ from pyspark.sql import SparkSession
 from sync_spark.sources.bucketed import (
     BUCKET_COL,
     read_target,
-    recover_interrupted_swaps,
+    restore_parked_swaps,
 )
 
 LOG_DIR = "_delta_log"
@@ -143,7 +143,7 @@ def write_commit(delta_dir: str, version: int, actions: list[dict]) -> None:
 def _live_files(store_path: str) -> dict[str, dict]:
     """Current store parquet files keyed by their export-relative path
     (``__bucket=K/part-*.parquet``) with size/mtime/partition value."""
-    recover_interrupted_swaps(store_path)
+    restore_parked_swaps(store_path)
     out: dict[str, dict] = {}
     for b in sorted(os.listdir(store_path)):
         if not b.startswith(f"{BUCKET_COL}="):

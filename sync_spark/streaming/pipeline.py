@@ -31,9 +31,21 @@ over the persisted batch (per-table × per-op counts + touched bucket
 sets via collect_set), and every skip/DLQ/stats decision branches off
 that single collected result — not 2 probe jobs × N tables (the
 round-1 anti-pattern; at the reference's 500-table scale that was
-~1000 scheduler round-trips per trigger). Per non-idle table the only
-further jobs are the merge's staged write (+ a DLQ write when bad
-rows exist).
+~1000 scheduler round-trips per trigger). The Spark jobs of a batch
+that touches one table are:
+
+- the summary: 3 jobs over the cached batch;
+- the DLQ write, only when bad rows exist;
+- the merge: ONE latest-per-key compaction exchange, the broadcast
+  of the keys the target is anti-joined against, and the staged write
+  of the touched buckets. The keys are the pre-compaction ``good``
+  keys: derived from the compacted frame instead, the plan ran the
+  compaction exchange three times, as it was not reused over the
+  cached batch.
+
+The apply-stats rows are already driver-local, so they are written
+with pyarrow — no Spark job. 7 jobs in all for a batch with bad
+rows.
 
 On a deployment with a table format the same ``apply_changes`` plan
 feeds Delta/Iceberg ``MERGE INTO``; the bucketed store is the
@@ -83,25 +95,6 @@ class TableTarget:
     table_format: str = "bucketed"
 
 
-def lakehouse_merge_available() -> bool:
-    """Probe for an in-JVM lakehouse MERGE backend (delta-spark /
-    Iceberg runtime). When one lands in the environment, _apply_batch
-    is the single seam to swap: its bucketed read-merge-overwrite
-    becomes ``MERGE INTO`` against the table format with the SAME
-    apply_changes change set (the plan is backend-agnostic; only the
-    write primitive changes). Probed at call time, not import time, so
-    adding the jar to a running deployment's env needs no code change.
-    This container ships neither package, so the bucketed store is the
-    active backend (equivalence to the Delta protocol is pinned
-    offline by test_delta_export.py's jar-free read-back instead)."""
-    import importlib.util
-
-    return (
-        importlib.util.find_spec("delta") is not None
-        or importlib.util.find_spec("pyiceberg") is not None
-    )
-
-
 def _write_atomic(df: DataFrame, path: str) -> None:
     """Overwrite ``path`` with df via stage + rename-aside swap: the
     old dir is renamed aside before the new one lands, so there is no
@@ -112,6 +105,49 @@ def _write_atomic(df: DataFrame, path: str) -> None:
     tmp = f"{path}__stage_{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
     _swap_dir(tmp, path)
+
+
+STATS_STAGE_PREFIX = ".stage_"  # dot-prefixed: invisible to Spark listings
+
+
+def _write_apply_stats(
+    stats_path: str, table: str, batch_id: int, counts: list[tuple[str, int]]
+) -> None:
+    """Overwrite ``{stats_path}/table=T/batch_id=N`` with the (op, n)
+    apply counters — written with pyarrow, no Spark job: the rows are
+    already driver-local.
+
+    Idempotent per (table, batch) like the DLQ: a replayed batch
+    replaces its own dir. The file is staged under a dot-prefixed name
+    and swapped in; a non-dot ``batch_id=N__stage_*`` sibling would be
+    discovered as a partition value and double-counted by
+    ``apply_stats_totals``. A stage leaked by a crash stays invisible
+    to readers and is removed by the next write."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sync_spark.sources.bucketed import _swap_dir
+
+    table_dir = os.path.join(stats_path, f"table={table}")
+    if os.path.isdir(table_dir):
+        for entry in os.listdir(table_dir):
+            if entry.startswith(STATS_STAGE_PREFIX):
+                shutil.rmtree(os.path.join(table_dir, entry), ignore_errors=True)
+    tag = uuid.uuid4().hex
+    stage = os.path.join(table_dir, f"{STATS_STAGE_PREFIX}{tag[:8]}")
+    os.makedirs(stage)
+    pq.write_table(
+        pa.table(
+            {
+                "op": pa.array([op for op, _ in counts], pa.string()),
+                "n": pa.array([n for _, n in counts], pa.int64()),
+            }
+        ),
+        os.path.join(stage, f"part-00000-{tag}.parquet"),
+    )
+    _swap_dir(stage, os.path.join(table_dir, f"batch_id={batch_id}"))
 
 
 def snapshot_if_empty(
@@ -432,24 +468,23 @@ class CdcPipeline:
                     continue
                 if self.stats_path is not None:
                     # apply counters come straight from the collected
-                    # summary — a driver-local 2-column frame, not
-                    # another aggregation job over the batch
-                    stats = self.spark.createDataFrame(
+                    # summary — no aggregation job over the batch
+                    _write_apply_stats(
+                        self.stats_path,
+                        t.source_table,
+                        batch_id,
                         [(r["op"], r["n"]) for r in applied],
-                        "op string, n long",
-                    )
-                    (
-                        stats.coalesce(1)
-                        .write.mode("overwrite")
-                        .parquet(
-                            f"{self.stats_path}/table={t.source_table}/batch_id={batch_id}"
-                        )
                     )
                 if not applied:
                     continue  # e.g. only ignored deletes: target untouched
                 touched = sorted({b for r in applied for b in r["buckets"]})
 
                 good = changes.filter(~self._null_key_pred(t))
+                # the merge's anti-join key set: the pre-compaction
+                # keys (compaction keeps the key set, and no NULL-op
+                # row is left), so the plan computes the latest-per-
+                # key compaction once instead of again for its keys
+                touched_keys = good.select(*t.key_cols)
                 # mask/encrypt the after-image columns; key + op +
                 # seq stay intact for the merge (the constructor
                 # rejects rules on key columns, so bucket ids are
@@ -552,6 +587,7 @@ class CdcPipeline:
                     target,
                     good,
                     keys=t.key_cols,
+                    touched=touched_keys,
                 )
                 # merged reads the OLD bucket files while staging; the
                 # swap happens only after the staged write completes,

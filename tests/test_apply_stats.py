@@ -186,3 +186,84 @@ def test_cli_compact_stats_verb(spark, tmp_path, capsys):
     } == before == {("users", "insert"): (6, 3)}
     entries = sorted(os.listdir(f"{stats}/table=users"))
     assert entries == ["batch_id=3", "batch_id=c0000000003"]
+
+
+def _totals(spark, stats):
+    return {
+        (r.table, r.op): (r.total, r.n_batches)
+        for r in apply_stats_totals(spark, stats).collect()
+    }
+
+
+def test_stats_write_replay_overwrites(spark, tmp_path):
+    """Re-writing the same (table, batch_id) replaces that batch's
+    counters: a crash-replayed batch is counted once, with its latest
+    content, and no stage dir is left behind."""
+    import os
+
+    from sync_spark.streaming.pipeline import _write_apply_stats
+
+    stats = str(tmp_path / "stats")
+    _write_apply_stats(stats, "users", 1, [("insert", 5), ("update", 2)])
+    _write_apply_stats(stats, "users", 2, [("insert", 1)])
+    _write_apply_stats(stats, "users", 1, [("insert", 5), ("update", 2)])
+    assert _totals(spark, stats) == {
+        ("users", "insert"): (6, 2),
+        ("users", "update"): (2, 1),
+    }
+    _write_apply_stats(stats, "users", 1, [("insert", 4)])
+    assert _totals(spark, stats) == {
+        ("users", "insert"): (5, 2),
+    }
+    assert sorted(os.listdir(f"{stats}/table=users")) == ["batch_id=1", "batch_id=2"]
+
+
+def test_pyarrow_stats_read_beside_spark_written_dirs(spark, tmp_path):
+    """Counters written before the pyarrow writer (Spark parquet dirs)
+    and after it are one dataset: ``apply_stats_totals`` sums both and
+    ``compact_apply_stats`` folds both without changing the totals."""
+    from sync_spark.operators.monitor import compact_apply_stats
+    from sync_spark.streaming.pipeline import _write_apply_stats
+
+    stats = str(tmp_path / "stats")
+    for b, rows in ((1, [("insert", 3), ("delete", 1)]), (2, [("insert", 2)])):
+        spark.createDataFrame(rows, "op string, n long").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{stats}/table=users/batch_id={b}")
+    _write_apply_stats(stats, "users", 3, [("insert", 7), ("update", 4)])
+    _write_apply_stats(stats, "users", 4, [("delete", 2)])
+    want = {
+        ("users", "delete"): (3, 2),
+        ("users", "insert"): (12, 3),
+        ("users", "update"): (4, 1),
+    }
+    assert _totals(spark, stats) == want
+    assert compact_apply_stats(spark, stats, below_batch_id=4) == {"users": 3}
+    assert _totals(spark, stats) == want
+    _write_apply_stats(stats, "users", 5, [("insert", 1)])
+    assert _totals(spark, stats)[("users", "insert")] == (13, 4)
+
+
+def test_leftover_stats_stage_is_invisible_and_swept(spark, tmp_path):
+    """A stage dir leaked by a crash mid-write holds a real parquet
+    file, but its dot-prefixed name keeps it out of Spark's listing;
+    the next write for the table removes it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sync_spark.streaming.pipeline import STATS_STAGE_PREFIX, _write_apply_stats
+
+    stats = str(tmp_path / "stats")
+    _write_apply_stats(stats, "users", 1, [("insert", 2)])
+    leaked = f"{stats}/table=users/{STATS_STAGE_PREFIX}deadbeef"
+    os.makedirs(leaked)
+    pq.write_table(
+        pa.table({"op": ["insert"], "n": pa.array([100], pa.int64())}),
+        os.path.join(leaked, "part-00000-x.parquet"),
+    )
+    assert _totals(spark, stats) == {("users", "insert"): (2, 1)}
+    _write_apply_stats(stats, "users", 2, [("insert", 3)])
+    assert not os.path.exists(leaked)
+    assert _totals(spark, stats) == {("users", "insert"): (5, 2)}

@@ -114,3 +114,62 @@ def test_compaction_null_seq_loses(spark):
     out = {r.key: r for r in compact_latest_per_key(df, ["key"]).collect()}
     assert out["k1"].payload == "good"        # sequenced row wins
     assert out["k2"].payload == "only-null"   # all-null group still emits
+
+
+def _random_change_set(rnd: _random.Random):
+    """A seeded CDC change set over a composite (id, region) key whose
+    ``region`` may be NULL: inserts of new keys, updates and deletes of
+    target keys, PK-change delete+insert pairs (distinct seqs),
+    same-seq ties between a write and a delete, and NULL-seq rows.
+    Never a NULL op — the ``touched`` precondition."""
+    regions = ["eu", "us", None]
+    target = {(i, rnd.choice(regions)): rnd.randrange(1000) for i in range(rnd.randint(0, 12))}
+    live = list(target)
+    changes, seq, next_id = [], 0, 100
+    for _ in range(rnd.randint(1, 30)):
+        seq += 1
+        kind = rnd.choice(["insert", "update", "delete", "pk_change", "tie", "null_seq"])
+        if kind == "insert" or not live:
+            key = (next_id, rnd.choice(regions))
+            next_id += 1
+            live.append(key)
+            changes.append((*key, rnd.randrange(1000), "insert", seq))
+        elif kind == "update":
+            changes.append((*rnd.choice(live), rnd.randrange(1000), "update", seq))
+        elif kind == "delete":
+            changes.append((*rnd.choice(live), None, "delete", seq))
+        elif kind == "pk_change":
+            old = live.pop(rnd.randrange(len(live)))
+            new = (next_id, old[1])
+            next_id += 1
+            live.append(new)
+            changes.append((*old, None, "delete", seq))
+            seq += 1
+            changes.append((*new, rnd.randrange(1000), "update", seq))
+        elif kind == "tie":
+            key = rnd.choice(live)
+            changes.append((*key, rnd.randrange(1000), "update", seq))
+            changes.append((*key, None, "delete", seq))
+        else:
+            changes.append((*rnd.choice(live), rnd.randrange(1000), "update", None))
+    rnd.shuffle(changes)  # arrival order must not matter
+    return [(*k, v) for k, v in target.items()], changes
+
+
+def test_touched_key_shortcut_equals_default_path(spark):
+    """``apply_changes(..., touched=<pre-compaction keys>)`` — the CDC
+    pipeline's one-compaction merge — must give the same target as the
+    default path, which derives its key set from the compacted frame.
+    Duplicate keys in ``touched`` are allowed by contract."""
+    keys = ["id", "region"]
+    for seed in range(8):
+        rows, changes = _random_change_set(_random.Random(seed))
+        target = spark.createDataFrame(rows, "id long, region string, v long")
+        c = spark.createDataFrame(
+            changes, "id long, region string, v long, op string, seq long"
+        )
+        want = sorted(apply_changes(target, c, keys).collect(), key=str)
+        got = sorted(
+            apply_changes(target, c, keys, touched=c.select(*keys)).collect(), key=str
+        )
+        assert got == want, f"seed {seed}"
