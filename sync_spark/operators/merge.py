@@ -14,11 +14,15 @@ Reference semantics (cited for parity, not ported):
 
 Spark-first design: compaction is a per-key argmax aggregate (one
 shuffle on the key, partial map-side combine — see
-compact_latest_per_key), then the merge is two hash anti-joins + a
-union — all
-Catalyst-planned, broadcast-able when the change set is small (AQE
-decides), and idempotent: re-applying the same compacted batch yields
-the same target, which is what makes foreachBatch restart-safe.
+compact_latest_per_key), then the merge is a null-safe hash anti-join
+of the target against the changed keys + a union of the upserts — all
+Catalyst-planned and idempotent: re-applying the same compacted batch
+yields the same target, which is what makes foreachBatch
+restart-safe. ``apply_changes`` is the kernel of the MERGE statement
+and the Delta store. The bucketed CDC store runs the same rule as a
+bucket-local window instead (``sources/bucketed.merge_buckets``): one
+shuffle on the bucket id, no key broadcast, one file per bucket; both
+forms order a key's changes with ``latest_first``.
 """
 
 from __future__ import annotations
@@ -31,6 +35,21 @@ from pyspark.sql import functions as F
 OP_COL = "op"
 SEQ_COL = "seq"
 DELETE_OP = "delete"
+
+
+def latest_first(seq_col: str = SEQ_COL) -> F.Column:
+    """THE latest-wins order over one key's changes, as an ascending
+    sort key: the smallest value is the change that wins. Sequenced
+    rows come first (a NULL seq loses to any sequenced change), then
+    seq DESC, then op ASC (a delete wins a same-seq tie). One
+    definition for both merge forms — ``compact_latest_per_key``'s
+    ``min_by`` and the bucketed store's window ``orderBy``. seq must
+    be numeric: the negation buys the mixed direction in one key."""
+    return F.struct(
+        F.when(F.col(seq_col).isNull(), F.lit(1)).otherwise(F.lit(0)).alias("n"),
+        (-F.col(seq_col)).alias("s"),
+        F.col(OP_COL).alias("o"),
+    )
 
 
 def compact_latest_per_key(changes: DataFrame, keys: Sequence[str], seq_col: str = SEQ_COL) -> DataFrame:
@@ -61,21 +80,15 @@ def compact_latest_per_key(changes: DataFrame, keys: Sequence[str], seq_col: str
     non-enforcing JSON schema) must LOSE to any sequenced change —
     the window form's ``seq DESC`` was NULLS LAST; a bare
     ``struct(-seq, op)`` min would invert that (a NULL struct field
-    sorts FIRST under min), so the order key carries an explicit
-    nulls-last flag. seq must be numeric (the envelope pins it to
-    long); the negation trick is what buys the mixed-direction
-    (seq DESC, op ASC) tie-break inside one min_by."""
+    sorts FIRST under min), so the order key (``latest_first``)
+    carries an explicit nulls-last flag. seq must be numeric (the
+    envelope pins it to long)."""
     non_keys = [c for c in changes.columns if c not in keys]
     if not non_keys:
         return changes.dropDuplicates(list(keys))
-    order = F.struct(
-        F.when(F.col(seq_col).isNull(), F.lit(1)).otherwise(F.lit(0)).alias("n"),
-        (-F.col(seq_col)).alias("s"),
-        F.col(OP_COL).alias("o"),
-    )
     return (
         changes.groupBy(*keys)
-        .agg(F.min_by(F.struct(*non_keys), order).alias("__r"))
+        .agg(F.min_by(F.struct(*non_keys), latest_first(seq_col)).alias("__r"))
         .select(
             *[
                 (F.col(c) if c in keys else F.col("__r").getField(c).alias(c))
@@ -124,12 +137,11 @@ def apply_changes(
     ``touched``: the change-key set the target rows are anti-joined
     against, for a caller that already has it so the merge does not
     derive it again. The MERGE statement passes the keys of its in-plan
-    duplicate-key guard (zero extra stages); the CDC pipeline passes
-    the keys of its PRE-compaction change set, so the latest-per-key
-    compaction is planned once, not once more for its keys. Columns
-    must be the key columns, and the key set must equal that of
-    ``changes`` after the ``ignore_deletes`` filter — duplicates
-    allowed; caller guarantees no NULL-op rows (a NULL-op survivor is
+    duplicate-key guard (zero extra stages). Columns must be the key
+    columns, and the key set must equal that of ``changes`` after the
+    ``ignore_deletes`` filter — duplicates allowed, so the keys of the
+    PRE-compaction change set qualify; caller guarantees no NULL-op
+    rows (a NULL-op survivor is
     neither upsert nor delete, so the default path leaves its target
     row alone while a caller-built key set would drop it)."""
     # ignore_deletes BEFORE compaction: with deletes ignored they are

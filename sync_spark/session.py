@@ -1,10 +1,11 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode defaults are sized from ``SPARK_GRAFT_CPUS`` (driver
-contract) but every setting here is the one we'd also want on a real
-cluster: AQE on (runtime coalesce + skew-join handling), Arrow for
-any pandas exchange, UTC session time so results are comparable with
-the DuckDB oracle and stable across machines.
+Local-mode defaults are sized from ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEMORY`` (driver contract), else from the host (see
+``host_defaults``), but every setting here is the one we'd also want
+on a real cluster: AQE on (runtime coalesce + skew-join handling),
+Arrow for any pandas exchange, UTC session time so results are
+comparable with the DuckDB oracle and stable across machines.
 """
 
 from __future__ import annotations
@@ -17,6 +18,35 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def _mem_total_mb() -> int | None:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
+def host_defaults() -> tuple[int, str]:
+    """(local cores, driver memory) for the session: the
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` overrides, else the
+    cores this process may run on and half the host's RAM, capped at
+    16g — a heap sized past the host's memory fails late, under load,
+    instead of at start."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if mem is None:
+        total = _mem_total_mb()
+        mb = MAX_DRIVER_MEMORY_MB if total is None else min(MAX_DRIVER_MEMORY_MB, total // 2)
+        mem = f"{mb}m"
+    return (int(cpus) if cpus else len(os.sched_getaffinity(0))), mem
+
+
 def get_spark(app_name: str = "sync_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -25,7 +55,7 @@ def get_spark(app_name: str = "sync_spark", shuffle_partitions: int | None = Non
     (``spark.sql.adaptive.coalescePartitions``), so the static value
     only needs to be a sane upper bound for local runs.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_memory = host_defaults()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -64,7 +94,7 @@ def get_spark(app_name: str = "sync_spark", shuffle_partitions: int | None = Non
         # partitioning-independent throughout (the repo's order-free
         # aggregate discipline), confirmed by the full driver-sim
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # static conf: set at build time so bucketed saveAsTable has a

@@ -16,9 +16,11 @@ per batch. This module restores the reference's cost model on files:
 - a micro-batch derives its *touched* bucket set from the change
   keys, reads ONLY those buckets (Spark partition pruning does the
   file skipping: the ``__bucket IN (...)`` filter shows up as
-  PartitionFilters in the scan), merges, and atomically swaps only
-  those bucket directories. Untouched buckets are never read, never
-  rewritten — byte-identical across batches (tested);
+  PartitionFilters in the scan), merges them bucket-locally
+  (``merge_buckets``: one shuffle on the bucket id, one staged file
+  per bucket), and atomically swaps only those bucket directories.
+  Untouched buckets are never read, never rewritten — byte-identical
+  across batches (tested);
 - per-bucket swap is rename-aside (live → hidden ``.old_*`` parking
   dir, stage → live, drop parking dir). The guarantee is *crash
   safety*, not reader isolation: a crash at any point leaves the old
@@ -52,9 +54,11 @@ import shutil
 import uuid
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sync_spark.operators.merge import DELETE_OP, OP_COL, SEQ_COL, latest_first
 
 BUCKET_COL = "__bucket"
 META_FILE = ".sync_meta.json"  # dot-prefixed: invisible to Spark listings
@@ -340,6 +344,66 @@ def read_buckets(
     return df.filter(F.col(BUCKET_COL).isin(list(buckets))).drop(BUCKET_COL)
 
 
+def merge_buckets(
+    target: DataFrame,
+    changes: DataFrame,
+    keys: Sequence[str],
+    n_buckets: int,
+) -> DataFrame:
+    """The CDC MERGE as a bucket-local window — same result as
+    ``apply_changes(target, changes, keys)`` when ``target`` holds the
+    touched buckets' rows, in a plan shaped for the staged write.
+
+    Target rows and change rows cross ONE shuffle on the layout hash
+    (``repartition(BUCKET_COL)``: AQE may coalesce buckets into one
+    task, never split one across two — a skew split would resolve one
+    key in two places). One window spec partitioned by
+    ``(BUCKET_COL, *keys)`` then resolves each key: change rows sort
+    before target rows, changes by ``latest_first``.
+
+    - a key with no change row keeps every target row (duplicates
+      included, as with the anti-join);
+    - otherwise the first row — the latest change — survives unless
+      it is a delete.
+
+    Keys group null-safely (as ``eqNullSafe``). The output carries
+    ``BUCKET_COL`` and is already hash-partitioned and sorted on
+    ``(BUCKET_COL, *keys)``: ``overwrite_buckets`` writes it with no
+    second sort, one file per bucket, and no change-key broadcast.
+
+    ``changes``: target columns plus op and seq (extra columns are
+    dropped). Precondition: no NULL-op rows (the pipeline quarantines
+    them) — the default ``apply_changes`` path leaves the target row
+    of a NULL-op change alone, this form would drop it."""
+    cols = target.columns
+    tag = "__is_target"
+    # the order key is a column, not an inline expression: two copies
+    # of one expression get distinct aliases and plan two windows
+    w = Window.partitionBy(BUCKET_COL, *keys).orderBy(tag, "__order")
+    return (
+        target.select(
+            *cols,
+            F.lit(None).cast("string").alias(OP_COL),
+            F.lit(None).cast(changes.schema[SEQ_COL].dataType).alias(SEQ_COL),
+            F.lit(1).alias(tag),
+        )
+        .unionByName(changes.select(*cols, OP_COL, SEQ_COL, F.lit(0).alias(tag)))
+        .withColumn(BUCKET_COL, bucket_expr(keys, n_buckets))
+        .repartition(BUCKET_COL)
+        .withColumn("__order", latest_first())
+        .select(
+            "*",
+            F.row_number().over(w).alias("__rn"),
+            F.first(tag).over(w).alias("__first"),
+        )
+        .filter(
+            (F.col("__first") == 1)
+            | ((F.col("__rn") == 1) & (F.col(OP_COL) != DELETE_OP))
+        )
+        .select(*cols, BUCKET_COL)
+    )
+
+
 def overwrite_buckets(
     merged: DataFrame,
     path: str,
@@ -351,7 +415,12 @@ def overwrite_buckets(
     (which must all hash into ``touched`` — true by construction when
     merged = survivors-of-touched ∪ upserts). A touched bucket whose
     every row was deleted gets an explicit empty-but-readable parquet
-    dir so the target never loses its schema."""
+    dir so the target never loses its schema.
+
+    A ``merged`` that already carries ``BUCKET_COL`` (``merge_buckets``)
+    is written on that column as is: its plan's window sort already
+    orders each task by ``(BUCKET_COL, *keys)``, so the sort below is
+    satisfied without a second one."""
     touched = sorted(set(touched))
     if not touched:
         return
@@ -364,15 +433,16 @@ def overwrite_buckets(
             "would swap the wrong buckets — re-bucketize first"
         )
     stage = f"{path}__stage_{uuid.uuid4().hex[:8]}"
+    if BUCKET_COL not in merged.columns:
+        merged = merged.withColumn(BUCKET_COL, bucket_expr(keys, n_buckets))
     (
-        merged.withColumn(BUCKET_COL, bucket_expr(keys, n_buckets))
-        .sortWithinPartitions(BUCKET_COL, *keys)  # see write_bucketed
+        merged.sortWithinPartitions(BUCKET_COL, *keys)  # see write_bucketed
         .write.partitionBy(BUCKET_COL)
         .mode("overwrite")
         .parquet(stage)
     )
     spark = merged.sparkSession
-    schema = merged.schema
+    schema = merged.drop(BUCKET_COL).schema
     try:
         # every staged bucket must be in the touched set: rows hashing
         # elsewhere mean the caller's touched-set derivation disagrees

@@ -7,9 +7,10 @@ Reference parity map:
   mysql.go:205-214) → ``snapshot_if_empty``;
 - change-stream tail → ``readStream`` on the envelope log; resume
   tokens (T3) → ``checkpointLocation``;
-- per-event apply with latest-wins ordering (T4/W2) →
-  latest-per-key compaction + ``apply_changes`` MERGE per micro-batch,
-  idempotent so at-least-once delivery yields effectively-once;
+- per-event apply with latest-wins ordering (T4/W2) → a latest-per-
+  key MERGE per micro-batch (``merge_buckets`` on the bucketed store,
+  ``apply_changes`` on the Delta store), idempotent so at-least-once
+  delivery yields effectively-once;
 - **incremental apply cost** — the reference applies row-wise against
   an indexed store (mongodb.go:1184-1235 BulkWrite upsert/delete,
   mysql.go:524-692 UPDATE/DELETE by PK), i.e. O(batch) per batch, not
@@ -36,15 +37,15 @@ that touches one table are:
 
 - the summary: 3 jobs over the cached batch;
 - the DLQ write, only when bad rows exist;
-- the merge: ONE latest-per-key compaction exchange, the broadcast
-  of the keys the target is anti-joined against, and the staged write
-  of the touched buckets. The keys are the pre-compaction ``good``
-  keys: derived from the compacted frame instead, the plan ran the
-  compaction exchange three times, as it was not reused over the
-  cached batch.
+- the merge (``bucketed.merge_buckets``): ONE shuffle of the touched
+  buckets' rows and the change rows on the bucket id, then the staged
+  write. A window per ``(bucket, key)`` resolves each key inside its
+  bucket, so no change-key broadcast and no separate compaction
+  exchange is planned, and the window's sort is the write's sort: one
+  file per touched bucket.
 
 The apply-stats rows are already driver-local, so they are written
-with pyarrow — no Spark job. 7 jobs in all for a batch with bad
+with pyarrow — no Spark job. 6 jobs in all for a batch with bad
 rows.
 
 On a deployment with a table format the same ``apply_changes`` plan
@@ -64,12 +65,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sync_spark.functions.security import apply_security_rules
-from sync_spark.operators.merge import DELETE_OP, OP_COL, apply_changes
+from sync_spark.operators.merge import DELETE_OP, OP_COL
 from sync_spark.sources.bucketed import (
     bucket_expr_vals,
     bucketize_in_place,
     check_meta,
     is_bucketed,
+    merge_buckets,
     overwrite_buckets,
     read_buckets,
     read_target,
@@ -480,11 +482,6 @@ class CdcPipeline:
                 touched = sorted({b for r in applied for b in r["buckets"]})
 
                 good = changes.filter(~self._null_key_pred(t))
-                # the merge's anti-join key set: the pre-compaction
-                # keys (compaction keeps the key set, and no NULL-op
-                # row is left), so the plan computes the latest-per-
-                # key compaction once instead of again for its keys
-                touched_keys = good.select(*t.key_cols)
                 # mask/encrypt the after-image columns; key + op +
                 # seq stay intact for the merge (the constructor
                 # rejects rules on key columns, so bucket ids are
@@ -580,15 +577,11 @@ class CdcPipeline:
                 target = read_buckets(
                     self.spark, t.target_path, touched, schema=stored_schema
                 )
-                # ignore_deletes=False here: user deletes were already
+                # user deletes under ignore_deletes were already
                 # dropped at the envelope level; the delete rows that
-                # remain are PK-change synthetics that MUST apply
-                merged = apply_changes(
-                    target,
-                    good,
-                    keys=t.key_cols,
-                    touched=touched_keys,
-                )
+                # remain are PK-change synthetics that MUST apply.
+                # No NULL-op row is left (quarantined above).
+                merged = merge_buckets(target, good, t.key_cols, self.n_buckets)
                 # merged reads the OLD bucket files while staging; the
                 # swap happens only after the staged write completes,
                 # so no localCheckpoint barrier is needed

@@ -9,6 +9,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -163,8 +164,9 @@ def test_touched_bucket_read_partition_prunes(spark, tmp_path):
 
 def test_one_probe_job_per_batch_not_per_table(spark, tmp_path):
     """8 mapped tables, events for 1: the batch must cost one summary
-    job + the single merge's jobs — nowhere near the 2-probes-per-
-    table round-1 behavior (≥16 jobs before any merge work)."""
+    (3 jobs) + the single merge's jobs (its bucket shuffle and the
+    staged write) — nowhere near the 2-probes-per-table round-1
+    behavior (≥16 jobs before any merge work)."""
     tables = []
     for i in range(8):
         tgt = str(tmp_path / f"t_{i}")
@@ -190,18 +192,28 @@ def test_one_probe_job_per_batch_not_per_table(spark, tmp_path):
     finally:
         sc.setJobGroup("", "", False)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    # 1 summary + merge staging (+ a couple of AQE sub-jobs); the old
-    # per-table probing alone was 16 jobs for this shape
-    assert 0 < n_jobs <= 7, f"micro-batch ran {n_jobs} jobs"
+    # the summary's 3 jobs + the merge's shuffle and staged write; the
+    # old per-table probing alone was 16 jobs for this shape
+    assert 0 < n_jobs <= 6, f"micro-batch ran {n_jobs} jobs"
 
 
 def test_bench_shaped_batch_job_count(spark, tmp_path, monkeypatch):
     """The streaming bench's batch shape — ``name`` masked, ``balance``
     encrypted, DLQ and apply stats on, one null-key event and one
-    PK change among plain inserts/updates/deletes — runs in at most 7
-    Spark jobs: 3 for the summary, the DLQ write, one compaction, the
-    key broadcast and the staged write. The apply-stats write runs
-    none (driver-local rows written with pyarrow)."""
+    PK change among plain inserts/updates/deletes — runs in at most 6
+    Spark jobs:
+
+    1-3. the summary over the cached batch;
+    4. the DLQ write;
+    5. the merge's one shuffle (touched-bucket rows and change rows,
+       hashed on the bucket id);
+    6. the staged write, one file per touched bucket.
+
+    The apply-stats write runs none (driver-local rows written with
+    pyarrow). Every touched bucket ends up as exactly one key-sorted
+    data file — lookup_keys' row-group pruning relies on the order."""
+    import pyarrow.parquet as pq
+
     from sync_spark.functions.security import apply_security_rules
     from sync_spark.spec import FieldSecurity
     from sync_spark.streaming import pipeline as pl
@@ -281,11 +293,59 @@ def test_bench_shaped_batch_job_count(spark, tmp_path, monkeypatch):
         finally:
             sc.setJobGroup("", "", False)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("bench-shaped"))
-    assert 0 < n_jobs <= 7, f"bench-shaped micro-batch ran {n_jobs} jobs"
+    assert 0 < n_jobs <= 6, f"bench-shaped micro-batch ran {n_jobs} jobs"
     assert stats_jobs[-1] == 0
     assert spark.read.parquet(str(tmp_path / "dlq")).count() == 2
     ids = {r.id for r in read_target(spark, tgt).collect()}
     assert {100, 110, 200, 210} <= ids and not ids & {2, 3, 12, 13}
+    touched = {_bucket_of(spark, vid) for vid in (110, 11, 12, 210, 13)}
+    for b in touched:
+        d = os.path.join(tgt, f"{BUCKET_COL}={b}")
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+        keys = pq.read_table(os.path.join(d, files[0]), columns=["id"]).column("id").to_pylist()
+        assert keys == sorted(keys), (b, keys)
+
+
+def test_merge_write_plans_one_exchange_and_one_sort(spark, tmp_path):
+    """The bucket-local merge's staged write: exactly one Exchange (hash
+    on the bucket id), no broadcast, and one Sort — the window's, which
+    already satisfies the write's sortWithinPartitions(bucket, keys)."""
+    from sync_spark.operators.merge import apply_changes
+    from sync_spark.sources.bucketed import merge_buckets
+
+    tgt = str(tmp_path / "t_plan")
+    rows = [Row(id=i, v=f"r{i}") for i in range(1, 41)]
+    target = spark.createDataFrame(rows, SCHEMA)
+    write_bucketed(target, tgt, ["id"], N_BUCKETS)
+    changes = spark.createDataFrame(
+        [(1, "u1", "update", 5), (2, None, "delete", 6), (99, "n99", "insert", 7)],
+        "id long, v string, op string, seq long",
+    )
+    want = sorted(apply_changes(target, changes, ["id"]).collect())
+    touched = sorted({_bucket_of(spark, vid) for vid in (1, 2, 99)})
+    existing = read_buckets(spark, tgt, touched, schema=SCHEMA)
+    merged = merge_buckets(existing, changes, ["id"], N_BUCKETS)
+    overwrite_buckets(merged, tgt, ["id"], N_BUCKETS, touched)
+    assert sorted(read_target(spark, tgt).collect()) == want
+
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        d
+        for d in (execs.apply(i).physicalPlanDescription() for i in range(execs.size()))
+        if f"{tgt}__stage_" in d and "Window" in d
+    ]
+    assert len(plans) == 1, plans
+    # hashed on the bucket id ALONE: a (bucket, key) hash would let a
+    # bucket's rows land in several tasks, i.e. several files
+    assert re.search(rf"hashpartitioning\({BUCKET_COL}#\d+, \d+\)", plans[0]), plans[0]
+    # the tree of the AQE final plan: operator lines before the
+    # initial plan and the per-node details
+    tree = plans[0].split("\n\n", 1)[0].split("== Initial Plan ==")[0]
+    assert tree.count("Exchange") == 1, tree
+    assert "BroadcastExchange" not in tree
+    assert tree.count(" Sort (") == 1, tree
+    assert tree.count(" Window (") == 1, tree
 
 
 # ---------------------------------------------------------------------------

@@ -120,8 +120,9 @@ def _random_change_set(rnd: _random.Random):
     """A seeded CDC change set over a composite (id, region) key whose
     ``region`` may be NULL: inserts of new keys, updates and deletes of
     target keys, PK-change delete+insert pairs (distinct seqs),
-    same-seq ties between a write and a delete, and NULL-seq rows.
-    Never a NULL op — the ``touched`` precondition."""
+    same-seq ties between a write and a delete, and NULL-seq rows. The
+    target may repeat a key, with or without a change for it. Never a
+    NULL op — the ``touched`` and ``merge_buckets`` precondition."""
     regions = ["eu", "us", None]
     target = {(i, rnd.choice(regions)): rnd.randrange(1000) for i in range(rnd.randint(0, 12))}
     live = list(target)
@@ -153,14 +154,16 @@ def _random_change_set(rnd: _random.Random):
         else:
             changes.append((*rnd.choice(live), rnd.randrange(1000), "update", None))
     rnd.shuffle(changes)  # arrival order must not matter
-    return [(*k, v) for k, v in target.items()], changes
+    rows = [(*k, v) for k, v in target.items()]
+    rows += [(*k, rnd.randrange(1000)) for k in target if rnd.random() < 0.3]
+    return rows, changes
 
 
 def test_touched_key_shortcut_equals_default_path(spark):
-    """``apply_changes(..., touched=<pre-compaction keys>)`` — the CDC
-    pipeline's one-compaction merge — must give the same target as the
-    default path, which derives its key set from the compacted frame.
-    Duplicate keys in ``touched`` are allowed by contract."""
+    """``apply_changes(..., touched=<pre-compaction keys>)`` must give
+    the same target as the default path, which derives its key set from
+    the compacted frame. Duplicate keys in ``touched`` are allowed by
+    contract."""
     keys = ["id", "region"]
     for seed in range(8):
         rows, changes = _random_change_set(_random.Random(seed))
@@ -173,3 +176,50 @@ def test_touched_key_shortcut_equals_default_path(spark):
             apply_changes(target, c, keys, touched=c.select(*keys)).collect(), key=str
         )
         assert got == want, f"seed {seed}"
+
+
+def test_bucket_local_merge_equals_default_path(spark):
+    """``merge_buckets`` — the bucketed CDC store's one-shuffle window
+    merge — must give the same rows as ``apply_changes``' default path
+    on every seeded change set, with one bucket and with keys sharing
+    buckets."""
+    from sync_spark.sources.bucketed import BUCKET_COL, merge_buckets
+
+    keys = ["id", "region"]
+    for seed in range(8):
+        rows, changes = _random_change_set(_random.Random(seed))
+        target = spark.createDataFrame(rows, "id long, region string, v long")
+        c = spark.createDataFrame(
+            changes, "id long, region string, v long, op string, seq long"
+        )
+        want = sorted(apply_changes(target, c, keys).collect(), key=str)
+        for n_buckets in (1, 4):
+            got = merge_buckets(target, c, keys, n_buckets).drop(BUCKET_COL)
+            assert sorted(got.collect(), key=str) == want, f"seed {seed}, n={n_buckets}"
+
+
+def test_bucket_local_merge_duplicates_and_null_key_parts(spark):
+    """Duplicate target keys with no change all survive (as with the
+    anti-join); a changed key replaces all its duplicates; a NULL key
+    part groups null-safely (as with ``eqNullSafe``): (3, NULL) and
+    (3, 'eu') are different keys, (4, NULL) matches (4, NULL)."""
+    from sync_spark.sources.bucketed import BUCKET_COL, merge_buckets
+
+    target = spark.createDataFrame(
+        [(1, "eu", 10), (1, "eu", 11), (2, None, 20), (2, None, 21), (3, None, 30), (4, None, 40)],
+        "id long, region string, v long",
+    )
+    changes = spark.createDataFrame(
+        [
+            (2, None, 98, "update", 1),
+            (2, None, 99, "update", 2),
+            (3, "eu", 77, "insert", 3),
+            (4, None, None, "delete", 4),
+        ],
+        "id long, region string, v long, op string, seq long",
+    )
+    want = [(1, "eu", 10), (1, "eu", 11), (2, None, 99), (3, None, 30), (3, "eu", 77)]
+    got = merge_buckets(target, changes, ["id", "region"], 4).drop(BUCKET_COL)
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(want, key=str)
+    default = apply_changes(target, changes, ["id", "region"])
+    assert sorted(map(tuple, default.collect()), key=str) == sorted(want, key=str)
